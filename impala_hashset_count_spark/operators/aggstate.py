@@ -13,7 +13,8 @@ This module composes the engine's mergeable pieces into that table:
 - additive moments: count, non-null count, sum, sum of squares
   (-> mean/variance), min, max — integer/extremal merges are exact;
 - distinct count: Datasketches HLL (``hll_sketch_agg`` /
-  ``hll_union_agg`` — register-max merge, union-exact over sketches);
+  ``hll_union_agg`` — register-max merge, union-exact over sketches,
+  read out by ``hll_estimate`` from the registers alone);
 - heavy hitters: ``approx_top_k_accumulate`` / ``_combine`` —
   exact while per-cell distinct items fit ``max_items``;
 - quantiles: the deterministic bottom-k-by-hash sample
@@ -45,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .hashset_count import hll_estimate
 from .quantiles import hash_rank
 
 _QUANT = 1_000_000  # micro-unit fixed point for order-independent sums
@@ -160,7 +162,7 @@ def agg_state_finalize(
         F.when(F.col("n_vals") > 0, mean).alias("mean_v"),
         "vmin",
         "vmax",
-        F.hll_sketch_estimate("hll").alias("approx_distinct"),
+        hll_estimate("hll").alias("approx_distinct"),
         F.array_join(
             F.transform(ranked, lambda e: e["item"]), ","
         ).alias("top_keys"),

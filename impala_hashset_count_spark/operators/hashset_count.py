@@ -250,7 +250,9 @@ def hashset_count_rdd(
     Finalize lifecycle (`hashset-count.h:30-34`); Python pickling of the
     set between map and reduce sides plays the role of Serialize
     (`hashset-count.cc:195-262`)."""
-    pairs = df.select(key_col, value_col).rdd.map(tuple)
+    # A 2-field Row is already the (key, value) pair aggregateByKey
+    # unpacks; a per-row .map(tuple) only added a Python pass.
+    pairs = df.select(key_col, value_col).rdd
     counted = (
         pairs.aggregateByKey(_init(), _update, _merge, numPartitions=num_partitions)
         .mapValues(_finalize)
@@ -304,18 +306,33 @@ def distinct_sketch_table(
     )
 
 
+def hll_estimate(sketch: str | Column) -> Column:
+    """Estimate of an HLL sketch that depends only on the set of values
+    it has seen. Datasketches reads a sketch that took its values in
+    order through the HIP accumulator, which depends on that order: a
+    union that promotes to HLL mode while folding cells in, or a sketch
+    built in one pass, carries one, so the same values read 387 from
+    one fold order and 388 from another. A union with a sketch already
+    in HLL mode marks the result out of order, and then the estimate
+    comes from the registers alone (below HLL mode, from the coupon
+    set); both are set functions. So union the sketch with itself."""
+    sk = F.col(sketch) if isinstance(sketch, str) else sketch
+    return F.hll_sketch_estimate(F.hll_union(sk, sk))
+
+
 def rollup_distinct_from_sketches(
     sketch_table: DataFrame, keep_dims: list[str]
 ) -> DataFrame:
     """Re-aggregate a sketch table to a coarser grain: union the cell
     sketches (``hll_union_agg`` — register-wise max) and estimate.
     HLL unions are exact over sketches: sketch(A ∪ B) has the SAME
-    registers as union(sketch(A), sketch(B)), so the estimate equals
-    what sketching the coarser grain directly would produce
-    (property-tested), and merge order/partitioning cannot change it.
-    Returns keep_dims + ``approx_distinct`` (bigint estimate)."""
+    registers as union(sketch(A), sketch(B)), and ``hll_estimate``
+    reads only those, so the result equals what sketching the coarser
+    grain directly would produce and merge order/partitioning cannot
+    change it. Returns keep_dims + ``approx_distinct`` (bigint
+    estimate)."""
     return sketch_table.groupBy(*keep_dims).agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx_distinct")
+        hll_estimate(F.hll_union_agg("sk")).alias("approx_distinct")
     )
 
 

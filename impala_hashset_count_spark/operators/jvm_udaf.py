@@ -24,7 +24,9 @@ ordinary characters.
 
 Build & load are self-contained and lazy: ``ensure_jvm_jar`` compiles
 ``jvm/src/ihc/*.java`` against the installed pyspark's jars when the
-checked-in jar is missing or stale; ``register_jvm_udaf`` injects the
+checked-in jar is missing or was built from other sources (the jar
+carries a digest of the sources it was built from, so checkout mtimes
+never trigger a rebuild); ``register_jvm_udaf`` injects the
 jar into the RUNNING session (executor side via ``SparkContext.addJar``,
 driver side via the ``MutableURLClassLoader`` Spark already uses) and
 registers the SQL function through the Java helper — no session
@@ -36,8 +38,10 @@ expression.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import subprocess
+import zipfile
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +53,8 @@ _JVM_DIR = os.path.join(_REPO_ROOT, "jvm")
 _SRC_DIR = os.path.join(_JVM_DIR, "src", "ihc")
 _JAR = os.path.join(_JVM_DIR, "ihc-udaf.jar")
 _REGISTER_CLASS = "ihc.RegisterHashSetCount"
+#: jar entry holding the digest of the Java sources the jar was built from
+_DIGEST_ENTRY = "ihc-udaf.src-sha256"
 DEFAULT_NAME = "hashset_count_jvm"
 
 
@@ -58,11 +64,28 @@ def _pyspark_jars_glob() -> str:
     return os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
 
 
+def _source_digest(srcs: list[str]) -> str:
+    digest = hashlib.sha256()
+    for src in srcs:
+        with open(src, "rb") as fh:
+            digest.update(os.path.basename(src).encode())
+            digest.update(fh.read())
+    return digest.hexdigest()
+
+
+def _jar_digest() -> str | None:
+    try:
+        with zipfile.ZipFile(_JAR) as zf:
+            return zf.read(_DIGEST_ENTRY).decode()
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return None
+
+
 def ensure_jvm_jar() -> str:
-    """Path to the UDAF jar, compiling it first when missing or older
-    than any Java source. Raises RuntimeError when no jar exists and
-    javac is unavailable (callers needing graceful degradation use
-    ``try_register_jvm_udaf``)."""
+    """Path to the UDAF jar, compiling it first when missing or built
+    from sources other than the current Java sources. Raises
+    RuntimeError when no jar exists and javac is unavailable (callers
+    needing graceful degradation use ``try_register_jvm_udaf``)."""
     srcs = (
         sorted(
             os.path.join(_SRC_DIR, f)
@@ -72,10 +95,7 @@ def ensure_jvm_jar() -> str:
         if os.path.isdir(_SRC_DIR)
         else []
     )
-    if os.path.exists(_JAR) and (
-        not srcs
-        or os.path.getmtime(_JAR) >= max(os.path.getmtime(s) for s in srcs)
-    ):
+    if os.path.exists(_JAR) and (not srcs or _jar_digest() == _source_digest(srcs)):
         return _JAR
     if not srcs:
         raise RuntimeError(f"no jar at {_JAR} and no sources at {_SRC_DIR}")
@@ -91,6 +111,8 @@ def ensure_jvm_jar() -> str:
             ["jar", "cf", _JAR, "-C", classes, "."],
             check=True, capture_output=True, text=True,
         )
+        with zipfile.ZipFile(_JAR, "a") as zf:
+            zf.writestr(_DIGEST_ENTRY, _source_digest(srcs))
     except FileNotFoundError as exc:
         raise RuntimeError(
             "javac/jar not available and no prebuilt ihc-udaf.jar"

@@ -12,9 +12,10 @@ the deployment parity is an INIT-HOOK convention instead:
     spark = SparkSession.builder.getOrCreate()
     register_all(spark)
 
-wired wherever sessions are born — an application's session factory, a
-notebook kernel's startup script, or ``--conf
-spark.python.daemon.module``-style bootstrap for batch submissions.
+wired wherever sessions are born — an application's session factory
+or a notebook kernel's startup script. (``spark.python.daemon.module``
+is taken: ``session.get_spark`` points it at ``worker_daemon``, which
+keeps Python workers from re-reading unchanged zip archives per task.)
 After the one call, the whole SQL surface of this package is live:
 
 - ``hashset_count(col)`` — the faithful pandas UDAF (tier b), the

@@ -411,6 +411,29 @@ def test_sketch_estimates_accurate_and_partition_stable(spark, sf_small):
         assert abs(est - exact[flag]) <= max(0.05 * exact[flag], 2), (flag, est)
 
 
+def test_sketch_rollup_independent_of_fold_order(spark):
+    """Cells of 60 distinct values each stay below HLL mode; their union
+    crosses into it while folding, where an in-order estimate would
+    depend on which cells came first. Every fold order and partitioning
+    must read out the same estimate."""
+    from impala_hashset_count_spark.operators.hashset_count import (
+        distinct_sketch_table,
+        rollup_distinct_from_sketches,
+    )
+
+    rows = [(c % 4, c, f"v{(c * 37 + i) % 1500}") for c in range(40) for i in range(60)]
+    df = spark.createDataFrame(rows, "g int, d int, s string")
+    cells = spark.createDataFrame(
+        distinct_sketch_table(df, ["g", "d"], "s").collect(), "g int, d int, sk binary"
+    )
+    outs = {
+        tuple(sorted(map(tuple, rollup_distinct_from_sketches(
+            cells.orderBy(F.rand(seed)).repartition(n), ["g"]).collect())))
+        for seed in range(3) for n in (1, 3)
+    }
+    assert len(outs) == 1, outs
+
+
 class TestDistinctStateTable:
     """Batch-incremental exact distinct state
     (`operators/hashset_count.py::distinct_state_*`) — the persisted
